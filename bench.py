@@ -168,11 +168,15 @@ def main() -> None:
         try:
             c_before = canary()
             start = time.perf_counter()
-            spec.builder(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t = round(time.perf_counter() - start, 3)
-            release_pinned_blocks(spark)
+            try:
+                spec.builder(spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                t = round(time.perf_counter() - start, 3)
+            finally:
+                # a query that fails partway must not leave its pinned
+                # blocks for the next resample
+                release_pinned_blocks(spark)
             c_after = canary()
             canaries.extend([c_before, c_after])
             sp = spreads[spec.name]

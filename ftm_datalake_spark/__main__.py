@@ -587,8 +587,6 @@ def _dispatch(spark, args) -> int:
                 include=args.include, exclude=args.exclude,
             )
         if args.archive:
-            import os
-
             from pyspark.sql import functions as F
 
             from ftm_datalake_spark.sources.archive import (
@@ -608,14 +606,18 @@ def _dispatch(spark, args) -> int:
             # 404s (HTTP).
             docs = read_documents(spark, args.lake, args.dataset)
             if args.source.startswith(("http://", "https://")):
+                from ftm_datalake_spark import fsutil_py
                 from ftm_datalake_spark.functions.checksum import (
                     content_checksum,
                 )
+                from ftm_datalake_spark.sources.archive import _shard
                 from ftm_datalake_spark.sources.http_store import (
                     scan_http_store,
                 )
 
-                arch = os.path.join(args.lake, args.dataset, "archive")
+                lake = fsutil_py.resolve(
+                    args.lake, spark, _lake_s3_conn(args)
+                )
                 # Reuse the crawl step's walk instead of re-listing.
                 live = set(http_listing)
                 # skip-archived on metadata: only keys whose shard is
@@ -626,14 +628,8 @@ def _dispatch(spark, args) -> int:
                     r["key"]
                     for r in docs.select("key", "content_hash").collect()
                     if r["key"] in live
-                    and not os.path.exists(
-                        os.path.join(
-                            arch,
-                            r["content_hash"][0:2],
-                            r["content_hash"][2:4],
-                            r["content_hash"][4:6],
-                            r["content_hash"],
-                        )
+                    and not lake.exists(
+                        f"{args.dataset}/archive/{_shard(r['content_hash'])}"
                     )
                 ]
                 if pending:

@@ -205,9 +205,17 @@ def minhash_lsh_pairs(
     `postings` (r15, guide §2.4): callers that ALSO consume the shingle
     table (e.g. dedup_lsh_recall's exact ground-truth side) pass their
     already-pinned (doc_id, shingle) frame so the scan+tokenize+explode
-    subtree is shared instead of re-derived here."""
+    subtree is shared instead of re-derived here. When `postings` is
+    given, `k`, `text_col` and `id_col` are ignored; a frame without
+    the (doc_id, shingle) columns shingle_postings produces raises
+    ValueError (a schema check — no Spark job runs)."""
     if postings is None:
         postings = shingle_postings(df, text_col, id_col, k)
+    elif not {"doc_id", "shingle"} <= set(postings.columns):
+        raise ValueError(
+            "postings needs the (doc_id, shingle) columns shingle_postings "
+            f"produces; got {postings.columns}"
+        )
     bands = lsh_bands(
         minhash_signatures(postings, num_hashes), num_hashes, rows_per_band
     )

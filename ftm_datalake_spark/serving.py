@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ftm_datalake_spark.sources.archive import _shard
+
 
 def lookup_file(documents: DataFrame, dataset: str, key: str) -> dict | None:
     """Q1: metadata for one (dataset, key); None if absent (404 semantics)."""
@@ -161,5 +163,4 @@ def blob_shard_uri(archive_root: str, dataset: str, content_hash: str) -> str:
     """Q2: where the blob bytes live in the content-addressed layout
     (ab/cd/ef/<hash>; reference: ftm_datalake/util.py:8-11). The serving
     layer streams straight from the object store — never through Spark."""
-    shard = f"{content_hash[0:2]}/{content_hash[2:4]}/{content_hash[4:6]}/{content_hash}"
-    return f"{archive_root.rstrip('/')}/{dataset}/archive/{shard}"
+    return f"{archive_root.rstrip('/')}/{dataset}/archive/{_shard(content_hash)}"

@@ -80,3 +80,18 @@ def test_bitset_broadcast_guard_is_doc_scale(spark):
     # one of the aggregates computed during construction must be the
     # doc-scale sum(cnt) guard
     assert any(cols == ["sum(cnt)"] for cols in captured["cols"]), captured
+
+
+def test_minhash_lsh_pairs_rejects_postings_without_shingle_columns(spark):
+    """A `postings` frame that is not shingle_postings-shaped fails
+    fast on its schema (k/text_col/id_col would otherwise be silently
+    ignored), before any Spark job runs."""
+    from ftm_datalake_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame([("d1", "a b c d")], "doc_id string, text string")
+    wrong = spark.createDataFrame([("d1", "a b c")], "id string, gram string")
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
+    with pytest.raises(ValueError, match="doc_id, shingle"):
+        minhash_lsh_pairs(docs, postings=wrong)
+    assert len(tracker.getJobIdsForGroup(None) or []) == jobs_before

@@ -159,7 +159,7 @@ def test_task_fs_put_never_exposes_truncated_blob(tmp_path):
     mid-flight leaves NOTHING at the final content-addressed name, and
     a leftover stage file from a crashed run does not block a healthy
     re-publish."""
-    from ftm_datalake_spark.sources.archive import _task_fs_put
+    from ftm_datalake_spark.fsutil_py import _task_fs_put
 
     fs = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
     content = b"the complete blob"
@@ -195,7 +195,7 @@ def test_object_store_type_writes_direct(tmp_path, monkeypatch):
     """Object-store-typed filesystems (atomic-on-close) take the single
     direct write — no stage file is ever created, because a move there
     is a server-side copy that doubles traffic."""
-    from ftm_datalake_spark.sources.archive import _task_fs_put
+    from ftm_datalake_spark.fsutil_py import _task_fs_put
 
     base = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
     created = []

@@ -306,3 +306,78 @@ def test_http_stale_listing_skips_and_counts(spark, tmp_path, monkeypatch):
             hs.scan_http_store(spark, base, keys=["ghost.txt"]).collect()
     finally:
         httpd.shutdown()
+
+
+def test_crawl_archive_into_s3_lake_skips_archived_blobs(
+    spark, http_store, tmp_path, monkeypatch
+):
+    """`crawl --archive` from an HTTP source into an ``s3://`` lake: the
+    already-archived check must ask the lake's store, so a second run
+    fetches no blob over HTTP. The documents table (a Spark parquet
+    write, which needs s3a jars on a real s3:// lake) is redirected to
+    a local directory; the blob archive really lives on a moto S3
+    server."""
+    import argparse
+    import hashlib
+
+    boto3 = pytest.importorskip("boto3")
+    pytest.importorskip("moto")
+    from moto.server import ThreadedMotoServer
+
+    from ftm_datalake_spark.__main__ import _dispatch
+    from ftm_datalake_spark.pipelines import ingest
+    from ftm_datalake_spark.sources import http_store as hs
+
+    base, _root = http_store
+    table_lake = str(tmp_path / "table_lake")
+    real_crawl, real_read = hs.crawl_http, ingest.read_documents
+    monkeypatch.setattr(
+        hs, "crawl_http",
+        lambda spark_, src, ds, _lake, **kw: real_crawl(
+            spark_, src, ds, table_lake, **kw
+        ),
+    )
+    monkeypatch.setattr(
+        ingest, "read_documents",
+        lambda spark_, _lake, ds: real_read(spark_, table_lake, ds),
+    )
+    fetched: list[str] = []
+    real_scan = hs.scan_http_store
+
+    def spy(spark_, base_, keys=None, **kw):
+        if keys is None or isinstance(keys, list):
+            fetched.extend(keys or [])
+        else:
+            fetched.extend(r["key"] for r in keys.select("key").collect())
+        return real_scan(spark_, base_, keys, **kw)
+
+    monkeypatch.setattr(hs, "scan_http_store", spy)
+
+    server = ThreadedMotoServer(port=0, verbose=False)
+    server.start()
+    try:
+        host, port = server.get_host_and_port()
+        endpoint = f"http://{host}:{port}"
+        client = boto3.client(
+            "s3", endpoint_url=endpoint, region_name="us-east-1",
+            aws_access_key_id="testing", aws_secret_access_key="testing",
+        )
+        client.create_bucket(Bucket="http-lake")
+        monkeypatch.setenv("FTM_DATALAKE_S3_KEY", "testing")
+        monkeypatch.setenv("FTM_DATALAKE_S3_SECRET", "testing")
+        ns = argparse.Namespace(
+            cmd="crawl", source=base, dataset="ds", lake="s3://http-lake/lake",
+            include=None, exclude=None, archive=True, s3_endpoint=endpoint,
+        )
+
+        assert _dispatch(spark, ns) in (0, None)
+        for body in FILES.values():
+            ch = hashlib.sha1(body).hexdigest()
+            key = f"lake/ds/archive/{ch[:2]}/{ch[2:4]}/{ch[4:6]}/{ch}"
+            assert client.get_object(Bucket="http-lake", Key=key)["Body"].read() == body
+
+        fetched.clear()
+        assert _dispatch(spark, ns) in (0, None)
+        assert fetched == []  # unchanged source, every blob archived
+    finally:
+        server.stop()

@@ -302,11 +302,17 @@ def test_webdataset_shards_over_viewfs_roundtrip_and_golden_sha(
 # -------------------------------------------------------------- blob archive
 def test_archive_blobs_generic_scheme_fallback(spark, tmp_path, viewfs):
     """The non-s3 remote tier of the S10 sink: driver-side fsutil copy
-    lands the sharded layout on any Hadoop scheme, idempotently."""
+    lands the sharded layout on any Hadoop scheme, idempotently — from
+    source paths (archive_blobs) and from fetched bytes
+    (archive_blob_bytes) — and open_blob reads it back."""
     import hashlib
 
     from ftm_datalake_spark.functions.checksum import content_checksum
-    from ftm_datalake_spark.sources.archive import archive_blobs, open_blob
+    from ftm_datalake_spark.sources.archive import (
+        archive_blob_bytes,
+        archive_blobs,
+        open_blob,
+    )
     from ftm_datalake_spark.sources.tables import scan_binary_files
 
     src = tmp_path / "bsrc"
@@ -327,6 +333,22 @@ def test_archive_blobs_generic_scheme_fallback(spark, tmp_path, viewfs):
         local = tmp_path / "lake" / "ds1" / "archive" / ch[:2] / ch[2:4] / ch[4:6] / ch
         assert local.read_bytes() == content
         assert open_blob(root, "ds1", ch, spark=spark) == content
+
+    fetched = [b"fetched blob C", b"fetched blob D"]
+    frame = spark.createDataFrame(
+        [(bytearray(b), hashlib.sha1(b).hexdigest()) for b in fetched],
+        "content binary, content_hash string",
+    )
+    archive_blob_bytes(frame, root, "ds2")
+    archive_blob_bytes(frame, root, "ds2")  # idempotent
+    for content in fetched:
+        ch = hashlib.sha1(content).hexdigest()
+        local = tmp_path / "lake" / "ds2" / "archive" / ch[:2] / ch[2:4] / ch[4:6] / ch
+        assert local.read_bytes() == content
+        assert open_blob(root, "ds2", ch, spark=spark) == content
+    # a JVM-only scheme is unreadable without the driver's session
+    with pytest.raises(ValueError):
+        open_blob(root, "ds2", hashlib.sha1(fetched[0]).hexdigest())
 
 
 # ---------------------------------------------------------------- zip export
